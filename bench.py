@@ -329,6 +329,18 @@ def _load1() -> float:
         return os.getloadavg()[0]
 
 
+def _codegen_totals(spark) -> tuple[int, int]:
+    """(classes compiled, compile ns) so far in this JVM. The count is
+    CodegenMetrics' compilation-time histogram count; the time is
+    CodeGenerator's running compile-time sum (the histogram keeps only a
+    sample of its values, so it cannot give an exact total). In local
+    mode driver and executors share the JVM, so this covers both."""
+    jvm = spark.sparkContext._jvm
+    count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(count), int(ns)
+
+
 def _utxo_dump_path(rows: int) -> str:
     """Synthetic dump, cached across runs (generation is not the thing
     being measured)."""
@@ -472,14 +484,22 @@ def main():
     # way). memo_trigger records which query paid each build.
     from utxo_to_parquet_spark.operators.registry import memo_build_log
 
+    # per-query codegen deltas: a warm query that still compiles (e.g. one
+    # that inlines run-varying literals into generated code) shows here
     query_load1: dict[str, float] = {}
+    query_codegen_compiles: dict[str, int] = {}
+    query_codegen_ms: dict[str, float] = {}
     memo_trigger: dict[str, str] = {}
     memo_seen = len(memo_build_log())
     for name in HEADLINE:
         query_load1[name] = round(_load1(), 2)
+        cg0, cg_ns0 = _codegen_totals(spark)
         t0 = time.time()
         rows = qs[name](spark, sf_dir).collect()
         dt_q = time.time() - t0
+        cg1, cg_ns1 = _codegen_totals(spark)
+        query_codegen_compiles[name] = cg1 - cg0
+        query_codegen_ms[name] = round((cg_ns1 - cg_ns0) / 1e6, 1)
         blog = memo_build_log()
         for frag, bsec in blog[memo_seen:]:
             cell = f"memo:{frag}"
@@ -546,6 +566,8 @@ def main():
         "unit": "sec",
         "queries": times,
         "query_load1": query_load1,
+        "query_codegen_compiles": query_codegen_compiles,
+        "query_codegen_ms": query_codegen_ms,
         "memo_trigger": memo_trigger,
         "sf": sf,
         "utxo_convert_rows_per_sec": int(UTXO_BENCH_ROWS / dt),

@@ -1620,3 +1620,34 @@ def test_degenerate_guards_drop_rows_instead_of_nan(tmp_path, spark):
     pq.write_table(pa.Table.from_pylist(docs, schema=pa.schema(list(d_base))),
                    str(tmp_path / "documents.parquet"))
     assert QUERIES["q_text_zipf_fit"](spark, str(tmp_path)).count() == 0
+
+
+def test_mm_feature_extract_rounds_ties_like_oracle(tmp_path, spark):
+    """A document whose mean byte is an exact tie at the 7th decimal:
+    12021/128 = 93.9140625 rounds half away from zero to 93.914063, as
+    the oracle's ROUND does (Python's half-to-even round gave 93.914062)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    text = "]" * 11 + "^" * 117  # 11*93 + 117*94 = 12021 over 128 bytes
+    texts = [text, "abc", "hello world"]
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(len(texts)), pa.int64()),
+                "text": texts,
+                "lang": ["en"] * len(texts),
+                "source": ["web"] * len(texts),
+                "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+            }
+        ),
+        str(tmp_path / "documents.parquet"),
+    )
+    rows = QUERIES["q_mm_feature_extract"](spark, str(tmp_path)).collect()
+    by_id = {r["doc_id"]: r for r in rows}
+    assert by_id[0]["mean_byte"] == 93.914063
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'")
+    oracle = con.execute(ORACLES["q_mm_feature_extract"]).fetchall()
+    assert sorted(tuple(r) for r in rows) == sorted(oracle)

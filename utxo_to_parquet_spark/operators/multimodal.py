@@ -142,12 +142,23 @@ def q_mm_feature_extract(spark, sf_dir):
                 {
                     "doc_id": pdf["doc_id"],
                     "size": pdf["size"],
-                    "entropy": [round(e, 6) for e, _ in feats],
-                    "mean_byte": [round(m, 6) for _, m in feats],
+                    "entropy": [e for e, _ in feats],
+                    "mean_byte": [m for _, m in feats],
                 }
             )
 
-    return p.mapInPandas(extract, "doc_id long, size long, entropy double, mean_byte double")
+    # round in the JVM, half away from zero like the oracle's ROUND:
+    # Python's round() is half-to-even, so an exact tie such as
+    # 12021/128 = 93.9140625 came out 93.914062 against the oracle's
+    # 93.914063
+    return p.mapInPandas(
+        extract, "doc_id long, size long, entropy double, mean_byte double"
+    ).select(
+        "doc_id",
+        "size",
+        F.round("entropy", 6).alias("entropy"),
+        F.round("mean_byte", 6).alias("mean_byte"),
+    )
 
 
 @register(
