@@ -21,6 +21,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.proc import tree_cpu_s  # noqa: E402
+
 HEADLINE = [
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -341,6 +343,18 @@ def _codegen_totals(spark) -> tuple[int, int]:
     return int(count), int(ns)
 
 
+def _convert_trial(spark, dump: str, out: str) -> tuple[int, float, float]:
+    """One timed convert: (rows, wall s, CPU s of the process tree — this
+    driver, the JVM and its Python workers)."""
+    from utxo_to_parquet_spark.sources import convert_utxo_dump_to_parquet
+
+    t0, cpu0 = time.time(), tree_cpu_s()
+    # use_cache=False: the timed conversion includes the sequential
+    # framing pass, matching what the reference's wall time includes.
+    n = convert_utxo_dump_to_parquet(spark, dump, out, use_cache=False)
+    return n, time.time() - t0, tree_cpu_s() - cpu0
+
+
 def _utxo_dump_path(rows: int) -> str:
     """Synthetic dump, cached across runs (generation is not the thing
     being measured)."""
@@ -417,18 +431,19 @@ def main():
     QUIET_LOAD1 = 2.0
     trials_conv: list[float] = []
     conv_loads: list[float] = []
+    conv_cpu: list[float] = []
     while True:
         conv_loads.append(round(_load1(), 2))
-        t0 = time.time()
-        # use_cache=False: the timed conversion includes the sequential
-        # framing pass, matching what the reference's wall time includes.
         # chunk_rows stays at the library default (250k): at 2M bench
         # rows that is 8 decode tasks — fewer, fatter tasks beat 32
-        # skinny ones because per-task python-worker round-trip overhead
-        # exceeds the decode cost of a small split (measured: 64k chunks
-        # 1.96s, 250k chunks 1.32s)
-        n = convert_utxo_dump_to_parquet(spark, dump, out, use_cache=False)
-        trials_conv.append(time.time() - t0)
+        # skinny ones because every Python-worker task pays a fixed
+        # setup cost (pyspark's importlib.invalidate_caches() re-reads
+        # pyspark.zip's directory once per cached zipimporter: ~0.2 s of
+        # CPU a task) that exceeds the decode cost of a small split
+        # (measured: 64k chunks 1.96s, 250k chunks 1.32s)
+        n, wall, cpu = _convert_trial(spark, dump, out)
+        trials_conv.append(wall)
+        conv_cpu.append(round(cpu, 2))
         assert n == UTXO_BENCH_ROWS
         if len(trials_conv) >= 3 and (
             min(conv_loads) <= QUIET_LOAD1 or len(trials_conv) >= 6
@@ -469,6 +484,7 @@ def main():
     per_trial = {
         "utxo_convert": [round(t, 3) for t in trials_conv],
         "utxo_convert_load1": conv_loads,
+        "utxo_convert_cpu_s": conv_cpu,
         "utxo_point_lookup_parquet": [round(t, 3) for t in trials],
     }
 

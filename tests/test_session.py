@@ -1,15 +1,20 @@
 """Session-lifetime state: the generated-code cache keeps a warm query
-compiled, and the memo-fragment cache evicts its least recently used
-entry together with its files."""
+compiled, the memo-fragment cache evicts its least recently used entry
+together with its files, and every session's fragment dir is removed at
+exit. Also bench.py's per-trial codegen and CPU counters."""
 
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
+import textwrap
+import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from bench import _codegen_totals
+from bench import _codegen_totals, _convert_trial
 from utxo_to_parquet_spark.operators import all_queries
 from utxo_to_parquet_spark.session import CODEGEN_CACHE_ENTRIES
 
@@ -39,6 +44,21 @@ def test_bench_records_codegen_totals(spark):
     spark.range(7).selectExpr("id * 7919 + 104729 AS v").collect()
     n1, ns1 = _codegen_totals(spark)
     assert n1 > n0 and ns1 > ns0
+
+
+def test_bench_records_convert_cpu(tmp_path, spark):
+    """bench.py's convert trial counts the CPU of the whole process tree:
+    the JVM does the work, so the tree's CPU exceeds this driver's own."""
+    from utxo_to_parquet_spark.sources import write_utxo_dump
+    from utxo_to_parquet_spark.sources.synthetic import synthetic_utxo_rows
+
+    dump = str(tmp_path / "cpu.dump")
+    write_utxo_dump(dump, synthetic_utxo_rows(20_000, seed=5))
+    own0 = time.process_time()
+    n, wall, cpu = _convert_trial(spark, dump, str(tmp_path / "cpu.parquet"))
+    own = time.process_time() - own0
+    assert n == 20_000 and wall > 0
+    assert cpu > own > 0
 
 
 def _write_docs(path, ids):
@@ -86,3 +106,38 @@ def test_memo_fragment_evicts_least_recently_used_and_its_files(
     assert not os.path.exists(path_b)  # files deleted at eviction
     assert os.path.isdir(path_a)
     assert frag("a").count() == 2
+
+
+def test_memo_fragment_dirs_of_every_session_removed_at_exit(tmp_path):
+    """A process that stops its session and starts another leaves no
+    fragment dir behind at exit: each session's dir has its own cleanup."""
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    _write_docs(sf / "docs.parquet", [1, 2, 3])
+    script = textwrap.dedent(
+        f"""
+        from utxo_to_parquet_spark.operators import registry
+        from utxo_to_parquet_spark.session import get_spark
+
+        sf = {str(sf)!r}
+        for _ in range(2):
+            spark = get_spark("fragment-cleanup")
+            df = registry.memo_fragment(
+                spark, "cleanup", sf, lambda: spark.read.parquet(sf + "/docs.parquet")
+            )
+            assert df.count() == 3
+            spark.stop()
+        """
+    )
+    frag_root = tmp_path / "fragments"
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_FRAGMENT_DIR=str(frag_root),
+        SPARK_GRAFT_CPUS="1",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        PYTHONPATH=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    subprocess.run([sys.executable, "-c", script], env=env, check=True, timeout=600)
+    sessions = frag_root / "spark_graft_fragments"
+    assert sessions.is_dir()  # both sessions wrote there
+    assert list(sessions.iterdir()) == []

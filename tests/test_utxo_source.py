@@ -550,3 +550,67 @@ def test_streaming_datasource_replays_snapshot(tmp_path, spark):
     # value-level equality, not just counts
     assert streamed.exceptAll(batch).count() == 0
     assert batch.exceptAll(streamed).count() == 0
+
+
+def test_decode_is_the_only_python_stage(tmp_path, spark):
+    """The decode reads its split ids from a JVM range: the executed plan
+    is MapInArrow over Range, with no Python RDD (ExistingRDD) feeding
+    it, and one partition per split."""
+    rows = synthetic_utxo_rows(2_000, seed=17)
+    path = str(tmp_path / "plan.dump")
+    write_utxo_dump(path, rows)
+    _, splits = index_utxo_dump(path, chunk_rows=300)
+    assert len(splits) == 7
+    df = read_utxo_dump(spark, path, chunk_rows=300)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    m = next(i for i, ln in enumerate(lines) if "MapInArrow" in ln)
+    assert "Range" in lines[m + 1], plan
+    assert "ExistingRDD" not in plan
+    assert df.rdd.getNumPartitions() == len(splits)
+    assert spark_table(df) == expected_table(rows)
+
+
+def test_sampled_global_sort_clusters_scripts(tmp_path, spark):
+    """global_sort="sampled": the output is the input as a multiset,
+    every file is sorted by script, and file script ranges are disjoint."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    rows = synthetic_utxo_rows(6_000, seed=23)
+    dump = str(tmp_path / "sampled.dump")
+    out = str(tmp_path / "sampled.parquet")
+    write_utxo_dump(dump, rows)
+    n = convert_utxo_dump_to_parquet(
+        spark, dump, out, chunk_rows=500, global_sort="sampled"
+    )
+    assert n == 6_000
+    assert spark_table(spark.read.parquet(out)) == expected_table(rows)
+    ranges = []
+    for fp in glob.glob(f"{out}/part-*"):
+        scripts = pq.read_table(fp, columns=["script"]).column("script").to_pylist()
+        assert scripts == sorted(scripts)
+        if scripts:
+            ranges.append((scripts[0], scripts[-1]))
+    assert len(ranges) > 1
+    ranges.sort()
+    for (_, hi1), (lo2, _) in zip(ranges, ranges[1:]):
+        assert hi1 <= lo2
+
+
+def test_split_stride_reads_every_kth_split(tmp_path, spark):
+    """split_stride=3 decodes exactly splits 0, 3, 6 and 9, one partition
+    each, while the header keeps the full row count."""
+    from utxo_to_parquet_spark.sources import read_utxo_dump_with_header
+
+    rows = synthetic_utxo_rows(1_000, seed=29)
+    path = str(tmp_path / "stride.dump")
+    write_utxo_dump(path, rows)
+    _, splits = index_utxo_dump(path, chunk_rows=100)
+    assert len(splits) == 10
+    header, df = read_utxo_dump_with_header(spark, path, chunk_rows=100, split_stride=3)
+    assert header.num_utxos == 1_000
+    assert df.rdd.getNumPartitions() == 4
+    want = [r for k in (0, 3, 6, 9) for r in rows[k * 100 : (k + 1) * 100]]
+    assert spark_table(df) == expected_table(want)

@@ -115,7 +115,7 @@ def _parquet_fingerprint(sf_dir: str) -> tuple:
 
 
 _FRAGMENT_LOCK = None  # created lazily; guards build + cache mutation
-_FRAGMENT_CLEANUP_REGISTERED = False
+_FRAGMENT_SESSION_DIRS: set[str] = set()  # each removed at exit
 
 
 def _fragment_base_dir() -> str:
@@ -171,7 +171,7 @@ def memo_fragment(spark, name: str, sf_dir: str, build):
     import threading
     import time
 
-    global _FRAGMENT_LOCK, _FRAGMENT_CLEANUP_REGISTERED
+    global _FRAGMENT_LOCK
     if _FRAGMENT_LOCK is None:
         # RLock: fragment builds nest (trade_edges builds on the
         # trade_pairs_cs fragment), so the building thread re-enters
@@ -201,8 +201,10 @@ def memo_fragment(spark, name: str, sf_dir: str, build):
         session_dir = os.path.join(
             _fragment_base_dir(), "spark_graft_fragments", app_id
         )
-        if not _FRAGMENT_CLEANUP_REGISTERED:
-            _FRAGMENT_CLEANUP_REGISTERED = True
+        # one cleanup per session dir: a process that stops its session
+        # and starts another gets a new applicationId, hence a new dir
+        if session_dir not in _FRAGMENT_SESSION_DIRS:
+            _FRAGMENT_SESSION_DIRS.add(session_dir)
             atexit.register(shutil.rmtree, session_dir, ignore_errors=True)
         # one subdir per (name, sf_dir): distinct corpora must not
         # overwrite each other's materialization

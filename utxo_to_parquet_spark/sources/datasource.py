@@ -30,7 +30,6 @@ the input must live on a shared filesystem, as with any file source.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from typing import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -44,57 +43,34 @@ UTXO_SCHEMA_DDL = (
     "txid string, vout long, height long, coinbase boolean, amount long, script binary"
 )
 
+# an input without splits still plans one partition, which decodes nothing
+_NO_SPLITS = [InputPartition(None)]
 
-@dataclass
-class UtxoSplitPartition(InputPartition):
-    """One decode split; must be picklable (shipped to executors)."""
 
-    path: str
-    offset: int
-    length: int
-    carried_txid: bytes
-    carried_coins_left: int
-    num_rows: int
+def _split_partitions(options: dict) -> list[InputPartition]:
+    """One ``InputPartition`` per decode split; its value is the split's
+    :class:`~.utxo_dump.SplitExtent` (picklable, shipped to executors)."""
+    from .utxo_dump import split_extents
+
+    path = options.get("path")
+    if not path:
+        raise ValueError("utxo_dump: .load(path) is required")
+    _, extents = split_extents(path, chunk_rows=int(options.get("chunk_rows", 250_000)))
+    return [InputPartition(e) for e in extents]
 
 
 class UtxoDumpReader(DataSourceReader):
     def __init__(self, options: dict):
-        path = options.get("path")
-        if not path:
-            raise ValueError("utxo_dump: .load(path) is required")
-        self.path = path
-        self.chunk_rows = int(options.get("chunk_rows", 250_000))
+        self.options = options
 
     def partitions(self) -> Sequence[InputPartition]:
-        import os
+        return _split_partitions(self.options) or _NO_SPLITS
 
-        from .utxo_dump import _list_dump_files, index_utxo_dump
+    def read(self, partition: InputPartition) -> Iterator:
+        if partition.value is not None:
+            from .utxo_dump import decode_extent
 
-        out: list[UtxoSplitPartition] = []
-        for f in _list_dump_files(self.path):
-            f = os.path.abspath(f)
-            _, splits = index_utxo_dump(f, chunk_rows=self.chunk_rows)
-            size = os.path.getsize(f)
-            ends = [s.offset for s in splits[1:]] + [size]
-            out.extend(
-                UtxoSplitPartition(f, s.offset, end - s.offset, s.carried_txid,
-                                   s.carried_coins_left, s.num_rows)
-                for s, end in zip(splits, ends)
-            )
-        return out or [UtxoSplitPartition("", 0, 0, b"\x00" * 32, 0, 0)]
-
-    def read(self, partition: UtxoSplitPartition) -> Iterator:
-        if partition.num_rows == 0:
-            return
-        from .utxo_dump import Split, _decode_split
-
-        with open(partition.path, "rb") as f:
-            f.seek(partition.offset)
-            data = f.read(partition.length)
-        yield _decode_split(
-            data,
-            Split(0, partition.carried_txid, partition.carried_coins_left, partition.num_rows),
-        )
+            yield decode_extent(partition.value)
 
 
 class UtxoDumpStreamReader(DataSourceStreamReader):
@@ -113,26 +89,8 @@ class UtxoDumpStreamReader(DataSourceStreamReader):
     streaming sink (foreachBatch upserts, file sinks)."""
 
     def __init__(self, options: dict):
-        import os
-
-        from .utxo_dump import _list_dump_files, index_utxo_dump
-
-        path = options.get("path")
-        if not path:
-            raise ValueError("utxo_dump: .load(path) is required")
-        chunk_rows = int(options.get("chunk_rows", 250_000))
         self.splits_per_trigger = int(options.get("splits_per_trigger", 8))
-        self._parts: list[UtxoSplitPartition] = []
-        for f in _list_dump_files(path):
-            f = os.path.abspath(f)
-            _, splits = index_utxo_dump(f, chunk_rows=chunk_rows)
-            size = os.path.getsize(f)
-            ends = [s.offset for s in splits[1:]] + [size]
-            self._parts.extend(
-                UtxoSplitPartition(f, s.offset, end - s.offset, s.carried_txid,
-                                   s.carried_coins_left, s.num_rows)
-                for s, end in zip(splits, ends)
-            )
+        self._parts = _split_partitions(options)
 
     def initialOffset(self) -> dict:
         return {"split": 0}
@@ -146,22 +104,9 @@ class UtxoDumpStreamReader(DataSourceStreamReader):
         return {"split": self._avail}
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        return self._parts[start["split"] : end["split"]] or [
-            UtxoSplitPartition("", 0, 0, b"\x00" * 32, 0, 0)
-        ]
+        return self._parts[start["split"] : end["split"]] or _NO_SPLITS
 
-    def read(self, partition: UtxoSplitPartition) -> Iterator:
-        if partition.num_rows == 0:
-            return
-        from .utxo_dump import Split, _decode_split
-
-        with open(partition.path, "rb") as f:
-            f.seek(partition.offset)
-            data = f.read(partition.length)
-        yield _decode_split(
-            data,
-            Split(0, partition.carried_txid, partition.carried_coins_left, partition.num_rows),
-        )
+    read = UtxoDumpReader.read
 
     def commit(self, end: dict) -> None:
         pass
