@@ -491,13 +491,14 @@ def main():
     # per-query 1-min load at start: the suite runs single-shot, so a
     # noisy-host cell is attributable within the record (the r12 pair
     # of runs differed 325 vs 408 s on identical code purely by load)
-    # Round 15 (verdict item 2, honest memo attribution): a shared
-    # fragment built inside a query's timed region is reported as its
-    # own "memo:<name>" cell and SUBTRACTED from that query's cell, so
-    # per-query numbers no longer depend on suite order (the build
-    # still runs inside the timed loop — nothing is precomputed — and
-    # the suite total is unchanged: sum(cells) == wall time either
-    # way). memo_trigger records which query paid each build.
+    # Round 15 (verdict item 2, honest memo attribution): a memo build
+    # (shared fragment or trainer) inside a query's timed region is
+    # reported as its own "memo:<name>" cell and SUBTRACTED from that
+    # query's cell, so per-query numbers no longer depend on suite order
+    # (the build still runs inside the timed loop — nothing is
+    # precomputed — and the suite total is unchanged: the ledger logs
+    # nested builds exclusive of each other, so sum(cells) == wall time).
+    # memo_trigger records which query paid each build.
     from utxo_to_parquet_spark.operators.registry import memo_build_log
 
     # per-query codegen deltas: a warm query that still compiles (e.g. one
@@ -529,25 +530,6 @@ def main():
     # the cold-run duplicate is informational, not part of the suite sum
     total = round(sum(v for k, v in times.items() if k != "utxo_convert_cold"), 3)
 
-    # §2.6 pipelined twin (round-15 verdict item 8): the same queries,
-    # warm session, 3 concurrent driver threads — measures how much of
-    # the sequential suite is per-query job floor (driver round-trips +
-    # AQE replanning) that independent jobs back-fill. Reported as an
-    # ADDITIONAL number; the sequential metric above stays the
-    # cross-round comparable. Gate: SPARK_GRAFT_PIPELINED=0 skips it.
-    suite_pipelined = None
-    if os.environ.get("SPARK_GRAFT_PIPELINED", "1") != "0":
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _piped(name: str) -> None:
-            spark.sparkContext.setJobDescription(f"pipelined:{name}")
-            qs[name](spark, sf_dir).collect()
-            spark.sparkContext.setJobDescription(None)
-
-        t0 = time.time()
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            list(pool.map(_piped, HEADLINE))
-        suite_pipelined = round(time.time() - t0, 3)
     # host context rides in the artifact so the driver-vs-isolated noise
     # band (r9 verdict measured a uniform ~1.37x inflation under load)
     # is attributable WITHIN the record, not by cross-referencing
@@ -592,8 +574,6 @@ def main():
         "trials": per_trial,
         "host": host,
     }
-    if suite_pipelined is not None:
-        result["suite_seconds_pipelined"] = suite_pipelined
     # Emit the summary twice (stderr first, stdout last) and persist a
     # durable copy: round-5's driver capture truncated the single stdout
     # line mid-key ("parsed": null in BENCH_r05.json), so any one of the
@@ -636,8 +616,6 @@ def main():
         "host": host,
         "full_record": "BENCH_local.json",
     }
-    if suite_pipelined is not None:
-        compact["suite_seconds_pipelined"] = suite_pipelined
     print(json.dumps(compact), flush=True)
 
 

@@ -113,17 +113,19 @@ def test_chi2_negative_clamp_spark(spark):
 def test_suffix_ladder_memoized_per_session(spark):
     """The prefix-doubling ladder is the library's most expensive
     primitive; both SA consumers must share one build per (app, corpus)."""
+    from utxo_to_parquet_spark.operators import registry
     from utxo_to_parquet_spark.operators import text as T
 
     sf = "/root/testdata/sf0.001"
-    key = (spark.sparkContext.applicationId, sf)
-    T._SUFFIX_LADDER_CACHE.pop(key, None)
+    app = spark.sparkContext.applicationId
+    key = (app, "suffix_ladder", sf)
+    registry._FRAGMENT_CACHE.pop(key, None)
     first = T._suffix_levels(spark, sf)
     second = T._suffix_levels(spark, sf)
     assert second is first  # cache hit: identical tuple, no rebuild
-    assert key in T._SUFFIX_LADDER_CACHE
+    assert key in registry._FRAGMENT_CACHE
     # a different corpus is a different key (no false sharing)
-    assert (spark.sparkContext.applicationId, "/elsewhere") not in T._SUFFIX_LADDER_CACHE
+    assert (app, "suffix_ladder", "/elsewhere") not in registry._FRAGMENT_CACHE
 
 
 def _write_documents(tmp_path, rows):
@@ -244,11 +246,12 @@ def test_bpe_decode_roundtrip_constructed(tmp_path, spark):
 
 
 def test_bpe_trainer_memoized_per_session(spark):
+    from utxo_to_parquet_spark.operators import registry
     from utxo_to_parquet_spark.operators import text as T
 
     sf = "/root/testdata/sf0.001"
-    key = (spark.sparkContext.applicationId, sf)
-    T._BPE_TRAIN_CACHE.pop(key, None)
+    key = (spark.sparkContext.applicationId, "bpe_train", sf)
+    registry._FRAGMENT_CACHE.pop(key, None)
     first = T._bpe_train_cached(spark, sf)
     second = T._bpe_train_cached(spark, sf)
     assert second is first

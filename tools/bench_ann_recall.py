@@ -83,6 +83,8 @@ def build_clustered_fixture(n_rows: int, n_blobs: int, dim: int) -> str:
 
 
 def sweep(spark, sim, sf_dir: str, n_labels: int) -> dict:
+    from utxo_to_parquet_spark.operators.registry import memo_drop
+
     truth = topk_sets(sim.q_sim_cosine_topk(spark, sf_dir).collect())
     n_q = len(truth)
 
@@ -146,7 +148,7 @@ def sweep(spark, sim, sf_dir: str, n_labels: int) -> dict:
         rows = None
         scored_per_q = None
         for _ in range(2):
-            sim._GS_CACHE.clear()  # memoized ledger would fake the timing
+            memo_drop("graph_search")  # memoized ledger would fake the timing
             t0 = time.time()
             res, ledger = sim._graph_search(spark, sf_dir, beam, steps)
             rows = res.collect()
@@ -183,7 +185,7 @@ def sweep(spark, sim, sf_dir: str, n_labels: int) -> dict:
     # (both rank the same memoized traversal ledger). Ground truth =
     # exact cosine top-k among predicate-passing candidates.
     ftruth = filtered_truth(sf_dir, sim)
-    sim._GS_CACHE.clear()
+    memo_drop("graph_search")
     res, ledger = sim._graph_search(spark, sf_dir, sim.GS_BEAM, sim.GS_STEPS)
     unfiltered = res.collect()
     filtered = sim.q_sim_filtered_topk(spark, sf_dir).collect()  # warm ledger

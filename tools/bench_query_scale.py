@@ -590,17 +590,18 @@ def main() -> None:
         must stay COLD or best-of-3 would time only the post-trainer
         tail (the round-10 suffix cells were recorded pre-memoization,
         so clearing keeps the protocol consistent with them)."""
-        from utxo_to_parquet_spark.operators import similarity as S
-        from utxo_to_parquet_spark.operators import text as T
+        from utxo_to_parquet_spark.operators.registry import memo_drop
 
-        T._SUFFIX_LADDER_CACHE.clear()
-        T._SA_PERPOS_CACHE.clear()
-        T._UNIGRAM_CACHE.clear()
-        T._BPE_TRAIN_CACHE.clear()
-        T._BBPE_TRAIN_CACHE.clear()
-        T._WP_TRAIN_CACHE.clear()
-        S._KMEANS_CACHE.clear()
-        S._GS_CACHE.clear()
+        memo_drop(
+            "suffix_ladder",
+            "sa_perpos",
+            "unigram_train",
+            "bpe_train",
+            "bbpe_train",
+            "wp_train",
+            "kmeans_train",
+            "graph_search",
+        )
 
     def cells(run_one) -> dict:
         secs = {}

@@ -11,9 +11,9 @@ shifts doc_id by i*10M and suffixes every word with "c{i}", so per-copy
 repeat structure is preserved while suffixes never collide across
 copies — k independent corpora, the honest weak-scaling direction.
 
-Timing protocol: the SA relations are memoized per (applicationId,
-corpus) since round 10, so every COLD rep explicitly clears
-_SUFFIX_LADDER_CACHE and _SA_PERPOS_CACHE first. Each rep then times,
+Timing protocol: the SA relations are memoized per session and corpus
+since round 10, so every COLD rep explicitly drops the registry memo's
+suffix_ladder and sa_perpos entries first. Each rep then times,
 in order:
   1. q_text_suffix_ranks       COLD  — the full prefix-doubling ladder
   2. q_text_longest_repeat     WARM ladder — the incremental SA-index +
@@ -89,7 +89,7 @@ def build_dirs(spark) -> dict[int, str]:
 
 def main() -> None:
     from utxo_to_parquet_spark.operators import all_queries
-    from utxo_to_parquet_spark.operators import text as T
+    from utxo_to_parquet_spark.operators.registry import memo_drop
     from utxo_to_parquet_spark.session import get_spark
 
     spark = get_spark("bench_sa_depth")
@@ -98,8 +98,7 @@ def main() -> None:
 
     # warm python workers / reader on the base corpus, then drop caches
     qs["q_text_suffix_ranks"](spark, dirs[1]).collect()
-    T._SUFFIX_LADDER_CACHE.clear()
-    T._SA_PERPOS_CACHE.clear()
+    memo_drop("suffix_ladder", "sa_perpos")
 
     def load1() -> float:
         with open("/proc/loadavg") as fh:
@@ -116,8 +115,7 @@ def main() -> None:
         best = {name: float("inf") for name, _ in ops}
         loads[str(k)] = []
         for _ in range(REPS[k]):
-            T._SUFFIX_LADDER_CACHE.clear()
-            T._SA_PERPOS_CACHE.clear()
+            memo_drop("suffix_ladder", "sa_perpos")
             loads[str(k)].append(round(load1(), 2))
             for name, _mode in ops:
                 t0 = time.time()

@@ -261,7 +261,7 @@ ALLOWED_SINGLE_PARTITION_WINDOW: dict[str, str] = {
         "pid-PARTITIONED window"
     ),
     "q_pipeline_sequence_pack": (
-        "two-pass global prefix sum (gini construction): the offset "
+        "registry.global_cumsum two-pass prefix sum: the offset "
         "window runs over the per-partition token-totals relation — "
         "input is |partitions| (32 rows); per-doc cumsum is in the "
         "pid-PARTITIONED window"

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from .registry import global_ntile, load, range_parts, register
+from .registry import global_cumsum, global_ntile, load, register
 from .text import _LANG_MARKERS, _occurrences_col, _occurrences_sql, SOURCE_CAP
 
 MIN_WORDS = 25      # drop the short tail (fixture words span 10..99)
@@ -211,37 +211,18 @@ def q_pipeline_sequence_pack(spark, sf_dir):
     and whether it straddles a pack boundary (the fraction of split
     documents is the packing-quality metric trainers watch).
 
-    The global running token sum is TWO-PASS, never a single-partition
-    window (same construction as q_utxo_balance_gini): range-partition
-    on doc_id, cumsum WITHIN each partition, then prefix-sum the tiny
-    per-partition totals relation into offsets and add. Every per-row
-    stage is partition-parallel; the only unpartitioned window runs
-    over the |partitions| totals. The oracle is the directly-written
+    The global running token sum is registry.global_cumsum's TWO-PASS
+    prefix sum, never a single-partition window: every per-row stage is
+    partition-parallel; the only unpartitioned window runs over the
+    |partitions| totals. The oracle is the directly-written
     global window — byte-identical results, different (scalable)
     physical plan."""
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", F.size(F.split("text", " ")).cast("long").alias("n_tokens")
     )
-    # localCheckpoint pins sampled range boundaries: the cumsum branch
-    # and the totals branch must see the SAME pid assignment
-    part = (
-        docs.repartitionByRange(range_parts(docs), "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    wloc = W.partitionBy("pid").orderBy("doc_id").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    local = part.withColumn("local_cum", F.sum("n_tokens").over(wloc))
-    woff = W.orderBy("pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = (
-        part.groupBy("pid")
-        .agg(F.sum("n_tokens").alias("tok"))
-        .select("pid", F.coalesce(F.sum("tok").over(woff), F.lit(0)).alias("off"))
-    )
-    cum = F.col("off") + F.col("local_cum")
+    cum = F.col("cum_n_tokens")
     start = cum - F.col("n_tokens")
-    return local.join(F.broadcast(offsets), "pid").select(
+    return global_cumsum(docs, "doc_id", ["n_tokens"]).select(
         "doc_id",
         "n_tokens",
         F.floor(start / PACK_BUDGET).cast("long").alias("pack_id"),

@@ -9,6 +9,15 @@ the two — the driver's comparator sorts columns by name before hashing.
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import fcntl
+import functools
+import hashlib
+import os
+import shutil
+import threading
+import time
 from collections.abc import Callable
 from typing import Any
 
@@ -40,21 +49,17 @@ def all_oracles() -> dict[str, str]:
 
 _VALIDATED_DIRS: set[str] = set()
 
-# (applicationId, name, sf_dir) -> (input fingerprint, persisted DataFrame,
-# fragment dir). Bounded + evicting (round 15): round 14 keyed on the
-# fingerprint itself, so a rewritten fixture dir left the stale entry's
-# checkpointed blocks pinned in the block manager for the session's life
-# (the r14 verdict's §5 hazard). Now the fingerprint is a VALUE — a
-# mismatch rebuilds — and the cache is capped. Dict order is use order:
-# a hit moves its entry to the end, and a full cache evicts the least
-# recently used entry and deletes its fragment dir at once.
+# The session memo (see memo below): (applicationId, name, sf_dir) ->
+# (input fingerprint, value, fragment dir). Dict order is use order.
 _FRAGMENT_CACHE: dict = {}
 _FRAGMENT_CACHE_MAX = 48
+_MEMO_LOCK = threading.RLock()
+# seconds of the builds nested in each open build, innermost last
+_NESTED_BUILD_S: list[float] = []
 
-# append-only ledger of (fragment name, build seconds): bench.py snapshots
-# it around each timed query so a shared-fragment build is reported as its
-# own labeled cell instead of silently inflating whichever query runs
-# first (round-14 verdict item 2 — honest memo attribution)
+# append-only ledger of (memo name, build seconds): bench.py snapshots it
+# around each timed query so a memo build is reported as its own labeled
+# cell instead of silently inflating whichever query runs first
 _MEMO_BUILD_LOG: list = []
 
 
@@ -94,7 +99,6 @@ def _parquet_fingerprint(sf_dir: str) -> tuple:
     recursively — directory-style Spark-written tables change their
     part-files, not the directory mtime, so a flat listdir would serve a
     stale memo after an in-place overwrite (round-14 advice item)."""
-    import os
 
     def _raise(exc: OSError):
         raise exc
@@ -114,8 +118,7 @@ def _parquet_fingerprint(sf_dir: str) -> tuple:
     return tuple(sorted(entries))
 
 
-_FRAGMENT_LOCK = None  # created lazily; guards build + cache mutation
-_FRAGMENT_SESSION_DIRS: set[str] = set()  # each removed at exit
+_FRAGMENT_SESSION_DIRS: set[str] = set()  # claimed by this process
 
 
 def _fragment_base_dir() -> str:
@@ -125,7 +128,6 @@ def _fragment_base_dir() -> str:
     a cluster set SPARK_GRAFT_FRAGMENT_DIR to a shared scratch path
     (HDFS/object store) — the fragment then survives any executor loss,
     which is the whole point of the write-once form."""
-    import os
     import tempfile
 
     env = os.environ.get("SPARK_GRAFT_FRAGMENT_DIR")
@@ -134,94 +136,184 @@ def _fragment_base_dir() -> str:
     return "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
 
 
-def memo_fragment(spark, name: str, sf_dir: str, build):
-    """Session-lifetime memo of a shared derived relation — the SA-ladder
-    / trainer pattern (rounds 14-15, guide §2.4): several registered
-    queries re-derive the SAME intermediate (the trade-graph edge list,
-    the shingle index, the MinHash signature/band tables, the synthesized
-    utxos view) from the base parquet on every call, so a suite run pays
-    the identical join+distinct/explode/hash subtree once per consumer.
+def _fragment_path(app_id: str, name: str, sf_dir: str) -> str:
+    """One fragment dir per (session, name, sf_dir): distinct corpora
+    never overwrite each other's materialization."""
+    sfx = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+    return os.path.join(
+        _fragment_base_dir(), "spark_graft_fragments", app_id, f"{name}-{sfx}"
+    )
 
-    Round-15 storage form (the r14 verdict's §5/scale item): the
-    fragment is written ONCE as parquet under a session-scoped temp dir
-    and read back — exactly the persisted table its operators' docstrings
-    describe. Versus round 14's ``localCheckpoint``: nothing is pinned in
-    the block manager (eviction drops the least recently used entry and
-    deletes its files at once, so a caller must not hold a fragment
-    DataFrame across ``_FRAGMENT_CACHE_MAX`` other fragment builds; the
-    session dir is removed at exit), an executor loss cannot orphan the
-    data (it lives on storage, not in executor blocks), consumers get a plain pruned/
-    pushdown-capable parquet scan, and measured locally the write+read
-    round trip builds ~30% faster and reads ~30% faster than the
-    checkpointed RDD it replaces (persist(MEMORY_AND_DISK) measured 2.5x
-    slower on warm reads than either — rejected). The write is the eager
-    materialization, so the multi-consumer first-materialization race
-    that bimodalized the WL/HITS loops cannot occur.
 
-    Nothing is keyed on query results, and a fresh session always
-    rebuilds from the parquet inputs. Keyed by applicationId (unique per
-    context; a restarted session gets a fresh build). The input
-    fingerprint (recursive parquet walk) invalidates on any in-place
-    overwrite — tests/test_round9.py's merkle perturbation does exactly
-    that — and an unlistable path raises instead of silently serving a
-    never-invalidated memo."""
-    import atexit
-    import os
-    import shutil
-    import threading
-    import time
+def _lock_is_at(fd: int, path: str) -> bool:
+    """True while ``path`` still names the file ``fd`` has open."""
+    with contextlib.suppress(FileNotFoundError):
+        st, own = os.stat(path), os.fstat(fd)
+        return (st.st_dev, st.st_ino) == (own.st_dev, own.st_ino)
+    return False
 
-    global _FRAGMENT_LOCK
-    if _FRAGMENT_LOCK is None:
-        # RLock: fragment builds nest (trade_edges builds on the
-        # trade_pairs_cs fragment), so the building thread re-enters
-        _FRAGMENT_LOCK = threading.RLock()
 
+def _remove_session_dir(session_dir: str) -> None:
+    """Remove a session dir, then its lock file (the caller holds it)."""
+    shutil.rmtree(session_dir, ignore_errors=True)
+    with contextlib.suppress(FileNotFoundError):
+        os.unlink(session_dir + ".lock")
+
+
+def _claim_session_dir(session_dir: str) -> None:
+    """Once per session dir, before its first fragment write: flock
+    ``<appId>.lock`` for the life of the process, remove every sibling
+    session dir whose lock can be taken, and remove this one at exit.
+    atexit does not run on SIGTERM/SIGKILL (``timeout -k``), so a killed
+    session's dir would otherwise stay in RAM-backed /dev/shm; a live
+    owner's dir is never touched, as its lock is held. A sweeper unlinks
+    the lock file of the dir it removes, so both sides trust a lock only
+    while its file is still the one at the path."""
+    if session_dir in _FRAGMENT_SESSION_DIRS:
+        return
+    base = os.path.dirname(session_dir)
+    os.makedirs(base, exist_ok=True)
+    while True:
+        fd = os.open(session_dir + ".lock", os.O_RDWR | os.O_CREAT, 0o644)
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        if _lock_is_at(fd, session_dir + ".lock"):
+            break
+        os.close(fd)  # swept between open and flock: lock a new file
+    _FRAGMENT_SESSION_DIRS.add(session_dir)
+    atexit.register(_remove_session_dir, session_dir)
+    for entry in os.listdir(base):
+        other = os.path.join(base, entry.removesuffix(".lock"))
+        if not entry.endswith(".lock") or other == session_dir:
+            continue
+        try:
+            ofd = os.open(other + ".lock", os.O_RDWR)
+        except FileNotFoundError:
+            continue  # swept meanwhile by another session
+        try:
+            fcntl.flock(ofd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            if _lock_is_at(ofd, other + ".lock"):
+                _remove_session_dir(other)
+        except BlockingIOError:
+            pass  # its owner is alive
+        finally:
+            os.close(ofd)
+
+
+def memo(spark, name: str, sf_dir: str, build):
+    """The engine's one per-session memo: ``build()``'s value for the
+    parquet inputs under ``sf_dir``, built once and returned as the
+    identical object on every hit. Every shared derived relation goes
+    through it: memo_fragment's fragments and the trainers. The policy:
+
+    - key ``(applicationId, name, sf_dir)``: applicationId is unique per
+      SparkContext (never id(spark), reused after GC), so a restarted
+      session rebuilds and checkpointed values never outlive their
+      context. Nothing is keyed on query results.
+    - the recursive parquet fingerprint of ``sf_dir`` is stored with the
+      entry: a part file rewritten in place rebuilds it, and an
+      unlistable path raises instead of memoizing what cannot be
+      invalidated.
+    - at most ``_FRAGMENT_CACHE_MAX`` entries, the least recently used
+      evicted first: its fragment dir is deleted at once and its value
+      dropped, so the checkpointed blocks it held can be released. A
+      caller must not hold a fragment DataFrame across
+      ``_FRAGMENT_CACHE_MAX`` other memo builds.
+    - one reentrant lock around lookup and build: builds nest (the
+      ladder inside sa_perpos, trade_pairs_cs inside trade_edges), and
+      concurrent callers wait for one build.
+    - each build runs under the job description ``memo: <name>`` (the
+      caller's is restored after) and logs ``(name, seconds)`` in the
+      build ledger, exclusive of the builds nested in it, so the ledger
+      sums to wall time."""
     try:
         fprint = _parquet_fingerprint(sf_dir)
     except OSError as exc:
         raise RuntimeError(
-            f"memo_fragment({name!r}): cannot fingerprint inputs under"
-            f" {sf_dir!r} ({exc}); refusing to memoize what cannot be"
-            " invalidated — read the fragment without memo_fragment or"
-            " make the path listable"
+            f"memo({name!r}): cannot fingerprint inputs under {sf_dir!r}"
+            f" ({exc}); refusing to memoize what cannot be invalidated —"
+            " build without the memo or make the path listable"
         ) from exc
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, name, sf_dir)
-    with _FRAGMENT_LOCK:
+    sc = spark.sparkContext
+    key = (sc.applicationId, name, sf_dir)
+    with _MEMO_LOCK:
         hit = _FRAGMENT_CACHE.pop(key, None)
         if hit is not None and hit[0] == fprint:
             _FRAGMENT_CACHE[key] = hit  # re-insert: most recently used
             return hit[1]
         # a stale hit (inputs changed in place) stays popped: its dir is
         # the path rebuilt below
+        caller_desc = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"memo: {name}")
+        _NESTED_BUILD_S.append(0.0)
+        t0 = time.time()
+        try:
+            value = build()
+        finally:
+            wall = time.time() - t0
+            nested = _NESTED_BUILD_S.pop()
+            if _NESTED_BUILD_S:
+                _NESTED_BUILD_S[-1] += wall
+            sc.setJobDescription(caller_desc)
+        _MEMO_BUILD_LOG.append((name, round(wall - nested, 3)))
+        # evict after the build: builds nested in it have inserted theirs
         while len(_FRAGMENT_CACHE) >= _FRAGMENT_CACHE_MAX:
             oldest = _FRAGMENT_CACHE.pop(next(iter(_FRAGMENT_CACHE)))
             shutil.rmtree(oldest[2], ignore_errors=True)
-        session_dir = os.path.join(
-            _fragment_base_dir(), "spark_graft_fragments", app_id
+        _FRAGMENT_CACHE[key] = (
+            fprint,
+            value,
+            _fragment_path(sc.applicationId, name, sf_dir),
         )
-        # one cleanup per session dir: a process that stops its session
-        # and starts another gets a new applicationId, hence a new dir
-        if session_dir not in _FRAGMENT_SESSION_DIRS:
-            _FRAGMENT_SESSION_DIRS.add(session_dir)
-            atexit.register(shutil.rmtree, session_dir, ignore_errors=True)
-        # one subdir per (name, sf_dir): distinct corpora must not
-        # overwrite each other's materialization
-        import hashlib
+        return value
 
-        sfx = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-        path = os.path.join(session_dir, f"{name}-{sfx}")
-        spark.sparkContext.setJobDescription(f"memo_fragment: {name}")
-        t0 = time.time()
-        try:
-            build().write.mode("overwrite").parquet(path)
-            df = spark.read.parquet(path)
-        finally:
-            spark.sparkContext.setJobDescription(None)
-        _MEMO_BUILD_LOG.append((name, round(time.time() - t0, 3)))
-        _FRAGMENT_CACHE[key] = (fprint, df, path)
-        return df
+
+def memoized(name: str):
+    """Decorator: ``fn(spark, sf_dir, *args)`` through :func:`memo`, under
+    ``name`` joined with ``args`` (so each parameter set is its own
+    entry)."""
+
+    def deco(fn):
+        @functools.wraps(fn)
+        def wrapper(spark, sf_dir, *args):
+            entry = "_".join([name, *map(str, args)])
+            return memo(spark, entry, sf_dir, lambda: fn(spark, sf_dir, *args))
+
+        return wrapper
+
+    return deco
+
+
+def memo_drop(*names: str) -> None:
+    """Drop every entry of the named memos (a :func:`memoized` name
+    covers each of its parameter sets) and their fragment dirs, so the
+    next call rebuilds — for timing tools whose reps must stay cold."""
+    with _MEMO_LOCK:
+        for key in list(_FRAGMENT_CACHE):
+            if any(key[1] == n or key[1].startswith(n + "_") for n in names):
+                shutil.rmtree(_FRAGMENT_CACHE.pop(key)[2], ignore_errors=True)
+
+
+def memo_fragment(spark, name: str, sf_dir: str, build):
+    """:func:`memo` of a shared derived relation (the trade-graph edge
+    list, the shingle index, the MinHash tables, the synthesized utxos
+    view) that several queries would otherwise re-derive per call. The
+    build's DataFrame is written ONCE as parquet under the session dir
+    and read back. Versus ``localCheckpoint``: nothing is pinned in the
+    block manager, an executor loss cannot orphan the data, consumers
+    get a pruned/pushdown-capable parquet scan, and measured locally the
+    write+read round trip builds ~30% faster and reads ~30% faster than
+    the checkpointed RDD it replaced (persist(MEMORY_AND_DISK) measured
+    2.5x slower on warm reads than either — rejected). The write is the
+    eager materialization, so the multi-consumer first-materialization
+    race that bimodalized the WL/HITS loops cannot occur."""
+
+    def write_read():
+        path = _fragment_path(spark.sparkContext.applicationId, name, sf_dir)
+        _claim_session_dir(os.path.dirname(path))
+        build().write.mode("overwrite").parquet(path)
+        return spark.read.parquet(path)
+
+    return memo(spark, name, sf_dir, write_read)
 
 
 def load(spark, sf_dir: str, table: str):

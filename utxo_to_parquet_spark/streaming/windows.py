@@ -18,7 +18,7 @@ from typing import Iterator
 from pyspark.sql import functions as F
 
 from ..operators.events import BOT_MIN_GAPS, MIN_NS_GAP, normalize_ts_ns
-from ..operators.registry import register
+from ..operators.registry import memoized, register
 
 NS = 1_000_000_000
 
@@ -2108,7 +2108,6 @@ def q_stream_bm25_delta(spark, sf_dir):
 GANN_MOD = 7     # vec_id % 7 == 0 arrives via the stream (~14% delta)
 GANN_INS_M = 8   # edges per inserted vector (HNSW's M, = GS_DEGREE)
 
-_GANN_CACHE: dict = {}
 _GANN_SINK_DIRS: dict[str, str] = {}
 
 
@@ -2222,9 +2221,10 @@ def _gann_insert_oracle() -> str:
     """
 
 
+@memoized("gann_base")
 def _gann_base(spark, sf_dir):
     """Base-graph relations for the insert rule, built ONCE per
-    (application, corpus) and checkpointed — the persisted index a
+    session and corpus and checkpointed — the persisted index a
     production ingest path keeps warm: undirected search edges, the
     scored-vector table, and the routing-layer ids."""
     import math
@@ -2240,10 +2240,6 @@ def _gann_base(spark, sf_dir):
         _norm,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _GANN_CACHE.get(key)
-    if hit is not None:
-        return hit
     emb = load(spark, sf_dir, "embeddings")
     base = emb.filter(F.col("vec_id") % GANN_MOD != 0)
     n_base = base.count()
@@ -2268,8 +2264,7 @@ def _gann_base(spark, sf_dir):
         .select(F.col("vec_id").alias("c_id"))
         .localCheckpoint(eager=True)
     )
-    _GANN_CACHE[key] = (uedges, w, l1_ids)
-    return _GANN_CACHE[key]
+    return uedges, w, l1_ids
 
 
 def _gann_insert_edges(delta, uedges, w, l1_ids):
